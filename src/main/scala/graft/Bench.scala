@@ -1,73 +1,57 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
+import scala.collection.mutable
+import GraftSession.jsonString
+
+/** Throughput bench: times every SparkEntry query, writes the
+  * full record to `bench.json` (`SPARK_GRAFT_BENCH_OUT`) and ends stdout
+  * with one budgeted JSON line. A query that throws is never timed: it
+  * is left out of the total and listed under "failed". */
 object Bench {
-  /** Escape a string for safe interpolation inside a JSON string literal.
-    * benchOut/sfDir are env-controlled paths: a quote or backslash in either
-    * would otherwise produce the exact `parsed: null` artifact failure this
-    * file exists to prevent.
-    */
-  private def jesc(s: String): String = s.flatMap {
-    case '"'           => "\\\""
-    case '\\'          => "\\\\"
-    case c if c < ' '  => "\\u%04x".format(c.toInt)
-    case c             => c.toString
-  }
-
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // custom SQL functions + the levenshtein band/threshold optimizer
-    // rule — the gate grades the REWRITTEN edit-distance plans
-    GraftExtensions.register(spark)
+    val sfDir = GraftSession.sfDir
+    val spark = GraftSession.fromEnv()
     // untimed warmup: JVM/codegen/scan setup shouldn't bill the first query
     try {
       spark.read.parquet(s"$sfDir/lineitem.parquet").count()
       SparkEntry.queries("text_token_count")(spark, sfDir).count()
     } catch { case _: Throwable => () }
-    // SPARK_GRAFT_ONLY=a,b,c: time a few queries during local iteration
-    // (the driver never sets it — its bench always covers everything)
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-
-    def timeOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      // drop cross-query cached relations so each query pays its own cost
-      spark.catalog.clearCache()
-      val t0 = System.nanoTime()
-      try { GraftSession.forceAll(fn(spark, sfDir)) } catch { case _: Throwable => -1L }
-      val t = (System.nanoTime() - t0) / 1e9
-      SparkEntry.releaseCaches()
-      t
-    }
-
+    val only = GraftSession.only
     val battery = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
+    val fnOf = battery.toMap
 
-    // Timing protocol (r8): single-run numbers carried 20x ambient-load
-    // spikes into the record artifact (r7: q_pivot_status 0.23 s quiet vs
-    // 4.78 s driver on a 1-exchange plan). Every query now gets min-of-2,
-    // sub-second rows min-of-3, under a wall budget so the whole battery
-    // still finishes inside the driver's capture window. Re-runs go
-    // slowest-observed-first: a spiked query looks slow, so it is re-timed
-    // (and its spike discarded) before budget pressure can strike it out.
-    // SPARK_GRAFT_REPEAT=N forces the legacy fixed-N protocol instead.
+    val best = mutable.LinkedHashMap.empty[String, Double]
+    val failed = mutable.SortedSet.empty[String]
+    def timeOnce(name: String): Unit =
+      GraftSession.timed(spark)(fnOf(name)(spark, sfDir)) match {
+        case Right((_, t)) =>
+          if (!failed(name) && best.get(name).forall(t < _)) best(name) = t
+        case Left(e) =>
+          System.err.println(s"[bench] $name failed: $e")
+          failed += name
+          best -= name
+      }
+
+    // Timing protocol: single-run numbers carried 20x ambient-load
+    // spikes into the record (q_pivot_status 0.23 s quiet vs 4.78 s on a
+    // 1-exchange plan). Every query gets min-of-2, sub-second rows
+    // min-of-3, under a wall budget so the whole battery still finishes
+    // inside the caller's capture window. Re-runs go
+    // slowest-observed-first: a spiked query looks slow, so it is
+    // re-timed (and its spike discarded) before budget pressure can
+    // strike it out. SPARK_GRAFT_REPEAT=N forces a fixed min-of-N instead.
     val fixedRepeat = sys.env.get("SPARK_GRAFT_REPEAT").map(n => math.max(1, n.toInt))
     val wallBudgetSec = sys.env.get("SPARK_GRAFT_BENCH_BUDGET").map(_.toDouble).getOrElse(420.0)
-    val best = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     fixedRepeat match {
       case Some(n) =>
-        battery.foreach { case (name, fn) => best(name) = (1 to n).map(_ => timeOnce(fn)).min }
+        battery.foreach { case (name, _) =>
+          (1 to n).foreach(_ => if (!failed(name)) timeOnce(name))
+        }
       case None =>
         val benchStart = System.nanoTime()
         def elapsed: Double = (System.nanoTime() - benchStart) / 1e9
-        battery.foreach { case (name, fn) => best(name) = timeOnce(fn) }
-        val fnOf = battery.toMap
+        battery.foreach { case (name, _) => timeOnce(name) }
         // pass 2: everything; pass 3: rows still under a second after min-of-2
         for (pass <- 2 to 3) {
           val due = best.toSeq
@@ -76,63 +60,48 @@ object Bench {
           due.foreach { case (name, t) =>
             // guard: don't start a re-run the budget can't absorb even if
             // it repeats the observed time (plus scheduling headroom)
-            if (elapsed + math.max(t, 0.2) + 1.0 <= wallBudgetSec) {
-              val t2 = timeOnce(fnOf(name))
-              if (t2 >= 0 && t2 < best(name)) best(name) = t2
-            }
+            if (elapsed + math.max(t, 0.2) + 1.0 <= wallBudgetSec) timeOnce(name)
           }
         }
     }
     val results = best.toSeq.sortBy(_._1)
 
     def fmt(v: Double): String = BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
-    val total = results.map(_._2).sum
-    // Full artifact to disk — the driver's stdout capture is a 2000-byte
-    // tail, which a 128-query map overflows (BENCH_r03..r06 all reached
-    // the judge as `parsed: null` log fragments). The file is the record.
-    val fullQs = results.map { case (k, v) => "\"" + jesc(k) + "\":" + fmt(v) }
-      .mkString("{", ",", "}")
-    val fullLine =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${results.size},"queries":$fullQs,"sf":"${jesc(sfDir)}"}"""
+    def obj(fields: Seq[(String, String)]): String =
+      fields.map { case (k, v) => s"${jsonString(k)}:$v" }.mkString("{", ",", "}")
+    def entry(kv: (String, Double)): String = s"${jsonString(kv._1)}:${fmt(kv._2)}"
+    val head = Seq("metric" -> jsonString("total"), "value" -> fmt(results.map(_._2).sum),
+      "unit" -> jsonString("sec"), "n_queries" -> results.size.toString,
+      "n_failed" -> failed.size.toString)
+    val sf = "sf" -> jsonString(sfDir)
+    // Full record to disk — a stdout capture that keeps a 2000-byte
+    // tail cannot hold the per-query map. The file is the record.
     val benchOut = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench.json")
-    try java.nio.file.Files.writeString(java.nio.file.Paths.get(benchOut), fullLine)
+    val full = obj(head ++ Seq(
+      "queries" -> results.map(entry).mkString("{", ",", "}"),
+      "failed" -> failed.toSeq.map(jsonString).mkString("[", ",", "]"), sf))
+    try java.nio.file.Files.writeString(java.nio.file.Paths.get(benchOut), full)
     catch { case e: Throwable =>
       System.err.println(s"[bench] could not write $benchOut: ${e.getMessage}")
     }
     // Stdout line budgeted to fit the driver's tail window: slowest
     // queries first (the ones perf grading needs), stop before 1600
-    // bytes so the line plus sbt's trailing "[success]" banner both
-    // survive the 2000-byte capture. Omitted entries are counted, and
-    // the full map is always in bench.json.
+    // bytes. Omitted entries are counted, and the full map is always in
+    // bench.json. The skeleton is measured, not assumed: benchOut and
+    // sfDir are env-controlled paths of any length.
     val budget = 1600
-    val slowFirst = results.sortBy(-_._2)
-    val picked = scala.collection.mutable.ArrayBuffer.empty[String]
-    // measure the real preamble/suffix — benchOut and sfDir are
-    // env-controlled paths, so a fixed allowance could blow the budget
-    // right back past the capture window
-    val skeleton =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${results.size},"omitted":9999,"queries_full":"${jesc(benchOut)}","queries":{},"sf":"${jesc(sfDir)}"}"""
-    var used = skeleton.length
-    var omitted = 0
-    slowFirst.foreach { case (k, v) =>
-      val entry = "\"" + jesc(k) + "\":" + fmt(v)
-      if (used + entry.length + 1 <= budget) { picked += entry; used += entry.length + 1 }
-      else omitted += 1
+    def summary(omitted: Int, picked: Seq[String]): String = obj(head ++ Seq(
+      "omitted" -> omitted.toString, "queries_full" -> jsonString(benchOut),
+      "queries" -> picked.mkString("{", ",", "}"), sf))
+    var used = summary(9999, Nil).length
+    val picked = mutable.ArrayBuffer.empty[String]
+    results.sortBy(-_._2).map(entry).foreach { e =>
+      if (used + e.length + 1 <= budget) { picked += e; used += e.length + 1 }
     }
-    val line =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${results.size},"omitted":$omitted,"queries_full":"${jesc(benchOut)}","queries":${picked.mkString("{", ",", "}")},"sf":"${jesc(sfDir)}"}"""
-    println(line)
     spark.stop()
-    // Driver-parseability (r17 VERDICT item 1: every BENCH_r01..r17
-    // artifact arrived with `parsed: null` although the line above is
-    // valid JSON inside the capture window). Defensively re-emit AFTER
-    // spark.stop() so no executor/shutdown logging can interleave: an
-    // ultra-short totals-only line first, then the same budgeted
-    // per-query line as the process's very last stdout. Timing,
-    // methodology and the JSON contract are unchanged — the same line
-    // is printed twice.
-    println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","sf":"${jesc(sfDir)}"}""")
-    println(line)
+    // printed after stop(), so no shutdown logging can follow it: the
+    // record is read from the last stdout line
+    println(summary(results.size - picked.size, picked.toSeq))
     System.out.flush()
   }
 }

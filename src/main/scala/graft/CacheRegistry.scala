@@ -9,11 +9,12 @@ import org.apache.spark.sql.Dataset
   * sketch table, the LSH signature index) because column pruning
   * specializes each consumer branch and defeats exchange reuse. A bare
   * `persist()` with no owner leaks executor memory across a long-lived
-  * session — round 1's bench only stayed flat because it called
-  * `spark.catalog.clearCache()` between queries, which an embedding
-  * caller has no reason to do. Queries register pinned relations here;
-  * [[SparkEntry.releaseCaches]] (called by Verify/Bench after each
-  * query, and available to any library user) frees them.
+  * session unless the caller runs `spark.catalog.clearCache()` between
+  * queries, which an embedding caller has no reason to do. Queries
+  * register pinned relations here; [[SparkEntry.releaseCaches]] (called
+  * after each query by every harness main and by
+  * [[GraftSession.timed]], and available to any library user) frees
+  * them.
   */
 object CacheRegistry {
   private val tracked = new java.util.concurrent.ConcurrentLinkedQueue[Dataset[_]]()

@@ -1,4 +1,5 @@
-import graft._
+package graft
+
 import java.nio.file.{Files, Paths}
 
 /** Dev tool: dump formatted physical plans for the headline queries to
@@ -6,14 +7,14 @@ import java.nio.file.{Files, Paths}
   * README are inspectable without running Spark. */
 object ExplainProbe {
   def main(a: Array[String]): Unit = {
-    val spark = GraftSession.get(8)
+    val spark = GraftSession.fromEnv()
     val names = if (a.nonEmpty) a.toSeq
       // every registered query, alphabetical — PLANS.md is the full
       // plan ledger for the tree at HEAD, not a curated subset
       else SparkEntry.queries.keys.toSeq.sorted
     val sb = new StringBuilder
     sb.append("# PLANS — formatted physical plans for every registered query (sf0.01)\n\n")
-    sb.append("Generated by `sbt \"runMain ExplainProbe\"`. Things to check per plan:\n")
+    sb.append("Generated by `sbt \"runMain graft.ExplainProbe\"`. Things to check per plan:\n")
     sb.append("PushedFilters/ReadSchema on scans (pushdown + pruning), BroadcastHashJoin\n")
     sb.append("on dimension joins, partial HashAggregate before each Exchange.\n")
     names.foreach { n =>

@@ -1,27 +1,23 @@
-import graft._
+package graft
 
 /** Single-query timing probe for the interleaved A/B protocol
-  * (tools/ab_probe.sh). Mirrors Bench's per-query hygiene so probe
-  * rows are comparable to bench rows: cross-query caches cleared
-  * BEFORE the clock, per-query tracked caches released after. The
-  * first listed query still pays JVM/codegen/scan warmup (prepend a
-  * sacrificial query, the ab_probe round-2 protocol) — and
-  * `PROBE_REPEAT=n` re-times the whole list n times in one JVM, so
-  * later passes read deep-warm, the regime the bench's min-of-2
-  * reports; ab_probe's summary then aggregates all passes as samples.
+  * (tools/ab_probe.sh), timed exactly as Bench times a query
+  * ([[GraftSession.timed]]), so probe rows are comparable to bench rows.
+  * The first listed query still pays JVM/codegen/scan warmup (prepend a
+  * sacrificial query) — and `SPARK_GRAFT_REPEAT=n` re-times the whole
+  * list n times in one JVM, so later passes read deep-warm, the regime
+  * the bench's min-of-2 reports; ab_probe's summary then aggregates all
+  * passes as samples. A query that throws ends the probe.
   */
 object Probe {
   def main(a: Array[String]): Unit = {
-    val sf = sys.env.getOrElse("PROBE_SF", "/root/testdata/sf0.1")
-    val reps = math.max(1, sys.env.getOrElse("PROBE_REPEAT", "1").toInt)
+    val sf = GraftSession.sfDir
+    val reps = math.max(1, sys.env.getOrElse("SPARK_GRAFT_REPEAT", "1").toInt)
     val names = if (a.nonEmpty) a.toSeq else SparkEntry.queries.keys.toSeq.sorted
-    val spark = GraftSession.get(32)
+    val spark = GraftSession.fromEnv()
     for (_ <- 1 to reps) names.foreach { n =>
-      spark.catalog.clearCache()
-      val t0 = System.nanoTime
-      val c = GraftSession.forceAll(SparkEntry.queries(n)(spark, sf))
-      val dt = (System.nanoTime - t0) / 1e9
-      SparkEntry.releaseCaches()
+      val (c, dt) = GraftSession.timed(spark)(SparkEntry.queries(n)(spark, sf))
+        .fold(throw _, identity)
       println(f"PROBE $n%-28s $c%9d rows  $dt%8.2fs")
     }
     spark.stop()

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Weak-scaling soak: replicate the driver testdata N× with DISJOINT
@@ -21,8 +21,10 @@ import org.apache.spark.sql.functions._
   * disjoint isomorphic components.
   *
   * Usage: SPARK_GRAFT_SF_DIR=<dir> SPARK_GRAFT_SOAK_FACTORS=1,2,5,10
-  *        sbt "runMain graft.Soak"
-  * Emits one JSON line per factor: {"factor":k,"queries":{name:sec,…}}.
+  *        [SPARK_GRAFT_ONLY=q1,q2] sbt "runMain graft.Soak"
+  * (or tools/soak.sh). Emits one JSON line per factor:
+  * {"factor":k,"queries":{name:sec,…},"rows":{name:n,…}}. A query that
+  * throws ends the soak.
   */
 object Soak {
 
@@ -38,42 +40,39 @@ object Soak {
     "pipe_decontaminate", "text_tfidf_terms", "dedup_semantic",
     "graph_part_kcore", "graph_part_sssp", "dedup_survivors",
     "q_topn_per_group",
-    // r8 wave: wedge-join graph family + fingerprint/surprisal kernels
+    // wedge-join graph family + fingerprint/surprisal kernels
     "graph_part_clustering", "graph_part_common_neighbors",
     "text_lm_surprisal", "mm_image_phash",
-    // r9 wave: the two rewritten scale fixes + the learned-vector tier
+    // the two rewritten scale fixes + the learned-vector tier
     "q_pareto_share", "q_entity_resolution",
     "sim_topk_learned", "dedup_learned_semantic",
-    // r11 wave: bench-heavy rows that had never been soaked — the
-    // salted-join and multi-rank-walk mechanisms ARE scale mechanisms,
-    // so their curves belong in the standing evidence
+    // bench-heavy rows: the salted-join and multi-rank-walk mechanisms
+    // ARE scale mechanisms, so their curves belong in the standing evidence
     "q_orders_rfm", "q_skew_salted_join", "assoc_basket_lift",
     "pipe_leakage_matrix", "sim_topk_int8", "mm_resize_stats",
     "mm_image_near_dup", "dedup_span_fraction",
-    // r11 additions: the asymmetric broadcast-index decontamination is
-    // the scale-interesting newcomer (its cost must track the TRAIN
-    // side linearly while the eval broadcast stays fixed)
+    // the asymmetric broadcast-index decontamination: its cost must
+    // track the TRAIN side linearly while the eval broadcast stays fixed
     "pipe_decontaminate_fuzzy",
-    // r11 second wave: the embedding-space decon screen (multiprobe
+    // the embedding-space decon screen (multiprobe
     // bucket equi-join — candidate mass must stay bounded as B steps)
     // and the broadcast-anchor miner (one corpus pass, k fixed)
     "pipe_decontaminate_semantic", "sim_hard_negatives",
-    // r11 third wave: the uncertainty sampler rides the classifier pass
+    // the uncertainty sampler rides the classifier pass
     "text_uncertainty_sample",
-    // r11 fourth wave: the trilogy report composes three gated passes —
-    // its curve belongs in the standing evidence
+    // the trilogy report composes three gated passes
     "pipe_decontaminate_report",
-    // r12: trained bucket-local centroids — the Lloyd passes add
+    // trained bucket-local centroids — the Lloyd passes add
     // iterations×(equi-join + aggregation); the curve must stay in
     // dedup_semantic's flat envelope
     "dedup_semantic_kmeans",
-    // r12: the daily-embedding-ingest query — probe×cap pair stage
+    // the daily-embedding-ingest query — probe×cap pair stage
     // must scale with the batch (half the scaled corpus), not N²
     "dedup_semantic_incremental",
-    // r12: the two-tier cascade — stage 2 must stay proportional to
+    // the two-tier cascade — stage 2 must stay proportional to
     // the PAIR set (two equi-joins against embeddings), not the corpus
     "dedup_cascade",
-    // r13: the persisted-index probe — build is one bucketed write of
+    // the persisted-index probe — build is one bucketed write of
     // the history slice, probe cost must track the batch like the
     // query form's; the bucketBy layout is what's under soak here
     "dedup_semantic_indexed")
@@ -83,11 +82,10 @@ object Soak {
     * embeddings. Scaling decisions route through this map — a query
     * NOT listed here (and not TPC-H-shaped `q<digit>…`, which is
     * always fact-only) scales EVERY family: the conservative default
-    * costs only scaling time, where the old name-substring allowlist
-    * silently produced flat curves for any fact-joining query whose
-    * name missed every pattern (the r7 §8 failure, twice re-patched).
-    * A WRONG entry here fails loudly (missing parquet path), never
-    * silently. */
+    * costs only scaling time, where a name-substring allowlist
+    * silently produces flat curves for any fact-joining query whose
+    * name misses every pattern. A WRONG entry here fails loudly
+    * (missing parquet path), never silently. */
   private[graft] val AllFams = Set('d', 'f', 'e', 'v')
   private[graft] val SoakReads: Map[String, Set[Char]] = Map(
     "dedup_exact" -> Set('d'), "dedup_ngram_jaccard" -> Set('d'),
@@ -140,15 +138,14 @@ object Soak {
     "dedup_cascade" -> Set('d', 'e'),
     "text_uncertainty_sample" -> Set('d'),
     "pipe_decontaminate_report" -> Set('d', 'e'),
-    // r12: the events battery had ZERO weak-scaling evidence (the soak
-    // wrote events.parquet through unscaled) — the user-partitioned
-    // window family is where a bot user serializes a partition at
-    // 100 TB, so it gets its own scaled family + hot-user knob
+    // the user-partitioned window family is where a bot user
+    // serializes a partition at 100 TB, so events get their own scaled
+    // family + hot-user knob
     "q_events_sessions" -> Set('v'), "q_events_rolling" -> Set('v'),
     "q_events_ewma" -> Set('v'), "q_events_paths" -> Set('v'),
     "q_events_transitions" -> Set('v'), "q_events_retention" -> Set('v'),
     "q_events_funnel" -> Set('v'), "q_events_hau" -> Set('v'),
-    // r13: the sketch twin shares q_events_hau's scan; the persisted
+    // the sketch twin shares q_events_hau's scan; the persisted
     // index reads the embeddings family like its query form
     "q_events_hau_approx" -> Set('v'),
     "dedup_semantic_indexed" -> Set('e'))
@@ -182,7 +179,7 @@ object Soak {
     // one combined aggregate (one scan, not one per key); null-safe for
     // an empty table (max of nothing = null = trivially in range)
     val row = df.agg(max(col(keyCols.head).cast("long")),
-      keyCols.tail.map(kc => max(col(kc).cast("long"))): _*).head
+      keyCols.tail.map(kc => max(col(kc).cast("long"))): _*).head()
     keyCols.zipWithIndex.foreach { case (kc, i) =>
       if (!row.isNullAt(i))
         require(row.getLong(i) < KeyShift,
@@ -244,7 +241,7 @@ object Soak {
     * suffixes keep MOST pairs above the match threshold, but 10-hex
     * strings collide within distance 4 at ~1e-5 per pair — at n=4000
     * that is ~100 pseudo-match rows in the UNCAPPED run (measured 111
-    * vs the real 8; recorded in NOTES_r9 §3). The A/B is therefore a
+    * vs the real 8). The A/B is therefore a
     * COST probe: compare wall time, and expect the capped run — and
     * only it — to reproduce the real-data output. Default
     * SPARK_GRAFT_BLOCK_CAP excludes the block (flat);
@@ -258,7 +255,7 @@ object Soak {
       // every part column gets a benign value (not null): a hot-block
       // run shares the scaled part.parquet with every other part-reading
       // probe in the same soak invocation, and a null p_brand/p_type
-      // would silently change THEIR row sets (r9 ADVICE)
+      // would silently change THEIR row sets
       p.sparkSession.range(hotBlockNames).select(
         (col("id") + 950000000L).as("p_partkey"),
         concat(lit("hotblk "),
@@ -273,11 +270,10 @@ object Soak {
     if (hotOrderParts <= 0) li
     else li.unionByName(
       // non-null but OUT-OF-DOMAIN values for every lineitem column
-      // (same shared-parquet reasoning as appendHotBlock, r10 ADVICE
-      // refined): other fact-family probes in the same soak run read
-      // this file too, and an IN-domain filler (r10 used shipdate
-      // 1995 / flags N,O) silently entered their date-range and
-      // flag-grouped row sets. Sentinels — a shipdate past the TPC-H
+      // (same shared-parquet reasoning as appendHotBlock): other
+      // fact-family probes in the same soak run read this file too,
+      // and an IN-domain filler (shipdate 1995 / flags N,O) would enter
+      // their date-range and flag-grouped row sets. Sentinels — a shipdate past the TPC-H
       // 1992–1998 window and a flag pair no real row carries — fall
       // out of every range/flag predicate while staying non-null.
       li.sparkSession.range(hotOrderParts).select(
@@ -324,7 +320,7 @@ object Soak {
     * bucket count and expected occupancy track the corpus), and each
     * bucket's centroid candidates are its own lowest vec_ids —
     * under the shift those come from copy 0, which is fine: copies
-    * are isomorphic, and the r11 scheme's cost is O(N·C) regardless
+    * are isomorphic, and the scheme's cost is O(N·C) regardless
     * of where the centroids sit. */
   /** The one shift-and-union kernel behind every keyed table: copy c
     * shifts each named key by c·KeyShift (copy 0 is the original), so
@@ -445,7 +441,7 @@ object Soak {
     scaleShifted(p, k, "p_partkey")
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val sfDir = GraftSession.sfDir
     val factors = sys.env.getOrElse("SPARK_GRAFT_SOAK_FACTORS", "1,2,5,10")
       .split(",").map(_.trim.toInt).toSeq
     // 0 = disjoint shingle spaces; d>0 = ~1/d of tokens shared corpus-wide
@@ -453,43 +449,27 @@ object Soak {
     // 1 = grow only the history half (even doc_ids); the new batch stays
     // constant — the dedup_incremental cost-∝-batch probe
     val historyOnly = sys.env.getOrElse("SPARK_GRAFT_SOAK_HISTORY_ONLY", "0") == "1"
-    val onlyQueries = sys.env.get("SPARK_GRAFT_SOAK_QUERIES")
-      .map(_.split(",").map(_.trim).toSeq).getOrElse(SoakQueries)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val onlyQueries = GraftSession.only.getOrElse(SoakQueries)
     // 1 = scale spark.sql.shuffle.partitions with the factor (cpus·k),
     // the way a real cluster sizes partitions to the corpus. The
     // default soak HOLDS partitions fixed, so per-partition state
     // grows with the factor — a deliberate stress, but it conflates
-    // "operator scales" with "32 partitions fit ×64 data" (r11 ×64:
-    // three rows read >2× per 2× and the fixed-partition explanation
-    // was an argument, not a measurement — this knob makes it one).
+    // "operator scales" with "the fixed partitions fit ×64 data"; this
+    // knob separates the two by measurement.
     val shufScale = sys.env.getOrElse("SPARK_GRAFT_SOAK_SHUFFLE_SCALE", "0") == "1"
     // SPARK_GRAFT_SOAK_SHUFFLE_PARTS=n: explicit HIGH initial shuffle
-    // partition count, left for AQE to coalesce down — the
-    // GraftSession.clusterBuilder profile (r12 VERDICT #1: the ×128
-    // jumps were attributed to fixed-32 per-partition state passing
-    // the spill envelope, but neither fixed-32 nor partitions-∝-factor
-    // is the configuration a real cluster runs; this knob is).
-    // Overrides both the fixed and the ∝-factor arms.
+    // partition count, left for AQE to coalesce down — the cluster
+    // profile (README, "Designed for 100 TB"). Neither fixed partitions
+    // nor partitions-∝-factor is the configuration a real cluster runs;
+    // this one is. Overrides both the fixed and the ∝-factor arms.
     val shufParts = sys.env.get("SPARK_GRAFT_SOAK_SHUFFLE_PARTS").map(_.toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // explicit, not default-trusted: the cluster-profile arm's whole
-      // point is high-initial + runtime coalesce
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // same session surface as Verify/Bench: custom SQL functions + the
-    // levenshtein band/threshold optimizer rule
-    GraftExtensions.register(spark)
+    val spark = GraftSession.fromEnv()
+    val cpus = spark.sparkContext.defaultParallelism
 
     val workRoot = s"/tmp/graft_soak_${System.nanoTime()}"
     try {
       factors.foreach { k =>
-        val parts = shufParts.getOrElse(if (shufScale) cpus.toInt * k else cpus.toInt)
+        val parts = shufParts.getOrElse(if (shufScale) cpus * k else cpus)
         spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
         val dir = s"$workRoot/x$k"
         // which families to scale comes from the explicit per-query map
@@ -498,7 +478,7 @@ object Soak {
         // leaves its shifted order/part keys dangling, so any probe
         // that joins a dimension would silently process factor-1 data
         // past the join and the soak curve would read flat regardless
-        // of the operator's real scaling behavior (the r7 §8 failure)
+        // of the operator's real scaling behavior
         val fams = famsFor(onlyQueries)
         // the per-token suffix rewrite is the most expensive transform —
         // written only when some probed query reads documents
@@ -539,15 +519,12 @@ object Soak {
           Tables.embeddings(spark, sfDir)
             .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
         val results = onlyQueries.map { name =>
-          spark.catalog.clearCache()
-          val t0 = System.nanoTime()
-          val n = GraftSession.forceAll(SparkEntry.queries(name)(spark, dir))
-          val dt = (System.nanoTime() - t0) / 1e9
-          SparkEntry.releaseCaches()
-          (name, dt, n)
+          val (n, dt) = GraftSession.timed(spark)(SparkEntry.queries(name)(spark, dir))
+            .fold(throw _, identity)
+          (GraftSession.jsonString(name), dt, n)
         }
-        val qs = results.map { case (n, t, _) => s"\"$n\":$t" }.mkString("{", ",", "}")
-        val rows = results.map { case (n, _, r) => s"\"$n\":$r" }.mkString("{", ",", "}")
+        val qs = results.map { case (q, t, _) => s"$q:$t" }.mkString("{", ",", "}")
+        val rows = results.map { case (q, _, r) => s"$q:$r" }.mkString("{", ",", "}")
         println(s"""{"factor":$k,"sharedDen":$sharedDen,"historyOnly":$historyOnly,"shuffleParts":$parts,"queries":$qs,"rows":$rows}""")
       }
     } finally {

@@ -49,7 +49,7 @@ object SparkEntry {
 
   /** Release every intermediate a query pinned with `persist()` (the
     * sketch/signature tables). Call after consuming a query's result —
-    * Verify/Bench do; so should any embedding application that runs
+    * every harness main does; so should any embedding application that runs
     * queries in a long-lived session. */
   def releaseCaches(): Unit = CacheRegistry.releaseAll()
 }

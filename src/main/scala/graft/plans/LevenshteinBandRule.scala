@@ -41,7 +41,7 @@ import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, Sh
   *
   * Activation: `GraftExtensions` injects it for `--conf
   * spark.sql.extensions=graft.GraftExtensions` deployments;
-  * `GraftSession.get` / Verify / Bench set it on their sessions, so the
+  * every `GraftSession` session (all the harness mains) sets it, so the
   * driver's correctness gate exercises the rewritten plans (the ER and
   * fuzzy-match oracles stay green THROUGH the rewrite).
   */

@@ -30,10 +30,10 @@ object GraphQueries extends QueryPack {
       .where(col("w") >= 2)
   }
 
-  // The wedge-family hub audit (r8 ADVICE) lives INSIDE the operators
-  // now — GraphOps.auditHubs rides the degree table the hub filter
-  // already builds, so it costs one tiny agg over cached data instead
-  // of the separate full-degree job the r9 wrapper ran (r9 VERDICT #3).
+  // The wedge-family hub audit lives INSIDE the operators —
+  // GraphOps.auditHubs rides the degree table the hub filter already
+  // builds, so it costs one tiny agg over cached data instead of a
+  // separate full-degree job.
 
   /** An iterative graph job schedules ~3 stages per superstep; with a
     * small edge set, 32 near-empty tasks per stage cost more wall time
@@ -54,8 +54,8 @@ object GraphQueries extends QueryPack {
     *
     * The EDGE cache is the caller's (persistTracked, released by the
     * harness once the query is consumed) — so a query with two tiers
-    * over the same graph shares ONE edge build (r17: the float
-    * community tier's private persist forced the exact twin to re-run
+    * over the same graph shares ONE edge build (a private persist in
+    * the float community tier would force the exact twin to re-run
     * the whole group-then-expand pipeline from the lineitem scan —
     * two okey exchanges, two pair aggregations, per query). */
   private def graphHistogram(s: org.apache.spark.sql.SparkSession, edf: org.apache.spark.sql.DataFrame,
@@ -80,14 +80,14 @@ object GraphQueries extends QueryPack {
 
   override def queries: Map[String, Q] = Map(
     // G3 + A7: score-attenuated label propagation, label histogram —
-    // CERTIFICATE-graded (r8): the float tier's histogram rides next to
+    // CERTIFICATE-graded: the float tier's histogram rides next to
     // the exact-integer twin's with a per-size agreement flag, so the
     // row is hash-gradable (the oracle replays the exact CTEs and
     // claims full agreement — any float divergence surfaces as a red
     // row, which is precisely what the certificate asserts). Same
     // pattern that upgraded the SRP recall tier from rows-only.
     "graph_part_communities" -> ((s, d) => {
-      // ONE persisted edge build serves both tiers (r17): the float
+      // ONE persisted edge build serves both tiers: the float
       // tier's GraphX run and the exact-integer twin read the same
       // cached co-occurrence table instead of each re-running the
       // lineitem group-then-expand pipeline.
@@ -128,7 +128,7 @@ object GraphQueries extends QueryPack {
         .agg(count(lit(1)).as("n_communities"))
         .orderBy(col("community_size"))),
 
-    // PageRank over the co-occurrence graph — CERTIFICATE-graded (r8):
+    // PageRank over the co-occurrence graph — CERTIFICATE-graded:
     // float summation order makes the raw ranks unhashable, so the
     // query emits rank-order agreement@k between the float tier's
     // top-k hub set and the exact-integer twin's (k = 5/10/20, floor
@@ -139,9 +139,9 @@ object GraphQueries extends QueryPack {
     "graph_part_pagerank" -> ((s, d) => {
       val edf = cooccurEdges(s, d).persist()
       // symmetrize: co-occurrence is an undirected relation, and the
-      // exact twin (the hash-graded record) walks it undirected — the
-      // r7 float tier ran DIRECTED src<dst edges, a different chain
-      // whose hubs the certificate immediately flagged (overlap@20 = 0)
+      // exact twin (the hash-graded record) walks it undirected —
+      // DIRECTED src<dst edges are a different chain, whose hubs the
+      // certificate flags (overlap@20 = 0)
       val erdd = edf.rdd.flatMap(r => Seq(
           Edge(r.getLong(0), r.getLong(1), r.getLong(2).toDouble),
           Edge(r.getLong(1), r.getLong(0), r.getLong(2).toDouble)))
@@ -162,7 +162,7 @@ object GraphQueries extends QueryPack {
           val overlap = floatTop.take(k).toSet.intersect(exactTop.take(k).toSet).size
           // a graph with fewer than k vertices can only overlap on what
           // exists — the certificate tests agreement over the AVAILABLE
-          // board (vacuously met on an empty graph, the r13 empty-corpus
+          // board (vacuously met on an empty graph, the empty-corpus
           // axis); the reported floor column stays the documented
           // ceil(0.8k) so the row schema never varies with graph size
           val eff = math.min(floor, exactTop.length.toLong)
@@ -182,8 +182,8 @@ object GraphQueries extends QueryPack {
     // bit-identical under any partitioning/summation order, so unlike
     // the float tier above it gets a hard DuckDB value oracle (the same
     // ten iterations unrolled as CTEs). Top-20 hub parts.
-    // run() tracks its edge/degree caches in CacheRegistry; the
-    // Verify/Bench harness releases them after consuming the result.
+    // run() tracks its edge/degree caches in CacheRegistry; every
+    // harness main releases them after consuming the result.
     "graph_part_pagerank_exact" -> ((s, d) =>
       graft.graph.ExactPageRank.run(cooccurEdges(s, d).select("src", "dst"), iters = 10)
         .orderBy(col("rank_scaled").desc, col("v").asc)
@@ -207,7 +207,7 @@ object GraphQueries extends QueryPack {
       // empty co-occurrence edge set (corpus has no multi-part order):
       // nothing to personalize — emit the empty ranking, the oracle's
       // shape (its seed CTE is empty so its walk emits zero rows).
-      // Answer, don't crash (r13 empty-corpus axis): an empty source
+      // Answer, don't crash (empty-corpus axis): an empty source
       // partition is a data condition at 100 TB, not a pipeline error.
       val seed = if (seedRow.isNullAt(0)) 0L else seedRow.getLong(0)
       graft.graph.ExactPageRank.personalizedRun(e, seed, iters = 10)
@@ -342,7 +342,7 @@ object GraphQueries extends QueryPack {
     // discipline); K is a constant, so lineage stays shallow.
     "graph_part_bfs" -> ((s, d) => {
       val maxHop = 4
-      // single-pass explode undirect (r17): the union form executed the
+      // single-pass explode undirect: a union form would execute the
       // whole unpersisted cooccurEdges pipeline twice
       val und = graft.CacheRegistry.persistTracked(
         graft.graph.GraphOps.undirect(
@@ -422,7 +422,7 @@ object GraphQueries extends QueryPack {
     sb.toString
   }
 
-  // Every graph row is hash-graded (r8): deterministic graph facts get
+  // Every graph row is hash-graded: deterministic graph facts get
   // exact SQL oracles; the two float tiers emit certificates against
   // their exact-integer twins, whose claims the oracles pin.
   override def oracles: Map[String, String] = Map(

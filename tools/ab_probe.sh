@@ -1,7 +1,7 @@
 #!/usr/bin/env bash
-# Interleaved A/B bench protocol (NOTES_r10 §2, committed per r10
-# VERDICT #6). This host's single-query noise band is ±1 s, so any
-# per-query delta under ~2× read from ONE driver run is unreadable.
+# Interleaved A/B bench protocol. Single-query noise on a shared host
+# is about ±1 s, so any per-query delta under ~2× read from ONE bench
+# run is unreadable.
 # The readable protocol: run the two arms strictly interleaved
 # (A B A B …) minutes apart at most, then compare the PAIRED samples —
 # ambient drift hits both arms equally.
@@ -12,7 +12,8 @@
 #   -n N     pairs to run (default 3)
 #   -q LIST  comma-separated query names passed to graft.Probe
 #   arm args: env assignments for arm A and arm B ("" for none).
-#            PROBE_SF=<dir> selects the data (default sf0.1).
+#            SPARK_GRAFT_SF_DIR=<dir> selects the data (default sf0.1),
+#            SPARK_GRAFT_REPEAT=n re-times the list n times per run.
 #
 # Output: every PROBE line tagged with its arm, then a per-query
 # min/median summary per arm. Judge a delta real only if the two
@@ -42,9 +43,7 @@ for i in $(seq 1 "$N"); do
   for arm in A B; do
     envs="$([ "$arm" = A ] && echo "$ARM_A" || echo "$ARM_B")"
     # shellcheck disable=SC2086
-    # Probe lives in the root package, and sbt prefixes forked stdout
-    # with "[info] " — strip it with grep -o rather than anchoring
-    env $envs sbt -batch "runMain Probe $QUERIES" 2>/dev/null |
+    env $envs sbt -batch "runMain graft.Probe $QUERIES" 2>/dev/null |
       grep -o 'PROBE .*' | sed "s/^PROBE/PROBE $arm $i/" | tee -a "$LOG"
   done
 done

@@ -8,9 +8,9 @@
 #
 # Usage: tools/close_gate.sh <gate-commit> <matrix-summary>
 #   <gate-commit> = the commit the gate artifacts were produced at.
-#   <matrix-summary> = the round's matrix summary file. REQUIRED —
-#     a round-pinned default here silently greps a stale summary
-#     next round (fails closed, but forces per-round churn).
+#   <matrix-summary> = the summary tools/matrix.sh wrote
+#     (/tmp/matrix_summary.txt). REQUIRED — a default here could
+#     silently grep a stale summary.
 # Passes iff HEAD's product surface is identical to the gate commit's
 # and the working tree carries no further product changes.
 set -euo pipefail
